@@ -466,6 +466,15 @@ def sql_char_filter_expr(col: str, cfg: AnalyzerConfig) -> str:
     return out
 
 
+# the 1:1 token filters with a native SQL form ({} = the token expression)
+_SQL_TOKEN_FILTERS = {
+    # str.strip parity: Unicode whitespace ((?U)\s) plus the \x1c-\x1f
+    # separators Python also counts as space — Spark's trim() strips only 0x20
+    "trim": r"regexp_replace({}, '(?U)^[\\s\\x1c-\\x1f]+|[\\s\\x1c-\\x1f]+$', '')",
+    "reverse": "reverse({})",
+}
+
+
 def sql_tokenize_expr(col: str, cfg: AnalyzerConfig) -> str | None:
     """Native Spark SQL expression for analyzers that need no Python.
 
@@ -475,10 +484,10 @@ def sql_tokenize_expr(col: str, cfg: AnalyzerConfig) -> str | None:
     """
     sql_filters = None
     if cfg.token_filters:
-        if all(f in ("trim", "reverse") for f in cfg.token_filters):
+        if all(f in _SQL_TOKEN_FILTERS for f in cfg.token_filters):
             sql_filters = "x"
             for f in cfg.token_filters:  # 1:1, composed in tuple order
-                sql_filters = f"{f}({sql_filters})"
+                sql_filters = _SQL_TOKEN_FILTERS[f].format(sql_filters)
         else:
             return None  # porter/asciifold/synonym → pandas path
     src = sql_char_filter_expr(col, cfg)
@@ -487,7 +496,7 @@ def sql_tokenize_expr(col: str, cfg: AnalyzerConfig) -> str | None:
     if cfg.kind == "simple":
         base = f"regexp_extract_all(lower({src}), '{SIMPLE_TOKEN_PATTERN}', 0)"
     elif cfg.kind == "classic":
-        pat = CLASSIC_TOKEN_PATTERN.replace("\\", "\\\\").replace("'", "\\'")
+        pat = _sql_str(CLASSIC_TOKEN_PATTERN)
         inner = f"regexp_extract_all({src}, '{pat}', 0)"
         base = f"transform({inner}, x -> lower(x))" if cfg.lowercase else inner
     elif cfg.kind == "whitespace":
@@ -515,12 +524,12 @@ def sql_tokenize_expr(col: str, cfg: AnalyzerConfig) -> str | None:
             f" else array() end))"
         )
     elif cfg.kind == "pattern":
-        pat = cfg.pattern.replace("\\", "\\\\").replace("'", "\\'")
+        pat = _sql_str(cfg.pattern)
         inner = f"filter(split({src}, '{pat}'), x -> x != '')"
         base = f"transform({inner}, x -> lower(x))" if cfg.lowercase else inner
     elif cfg.kind == "path_hierarchy":
         # split takes a Java regex — quote the literal delimiter
-        pat = re.escape(cfg.path_delimiter).replace("\\", "\\\\")
+        pat = _sql_str(re.escape(cfg.path_delimiter))
         d = _sql_str(cfg.path_delimiter)
         parts = f"split({src}, '{pat}')"
         base = (

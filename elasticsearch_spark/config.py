@@ -101,7 +101,7 @@ class AnalyzerConfig:
     # (ReverseTokenFilterFactory.java — the leading-wildcard index trick).
     # All are 1:1 → token counts/positions are unchanged, so they run at
     # vocabulary level in the builder hot path; trim/reverse additionally
-    # stay SQL-expressible (transform(..., x -> reverse(trim(x)))).
+    # stay SQL-expressible (analyzers._SQL_TOKEN_FILTERS).
     token_filters: tuple[str, ...] = ()
     synonyms: tuple[tuple[str, str], ...] = ()
     # ShingleTokenFilterFactory.java: when > 1, emit unigrams + adjacent

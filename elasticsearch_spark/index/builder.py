@@ -90,9 +90,15 @@ def _flush_segment(
     frames: list[pd.DataFrame],
     cfg: IndexConfig,
     index_dir: str,
+    col_types: dict[str, pa.DataType],
     segment_prefix: str = "",
 ) -> dict:
-    """Build one immutable segment from the pandas rows of one pid chunk."""
+    """Build one immutable segment from the pandas rows of one pid chunk.
+
+    ``col_types``: Arrow type per key/stored column, from the input's Spark
+    schema — a chunk whose values are all null must still write the
+    column's real type (inferred from pandas it would be Parquet's null
+    type, which every later Spark read of ``docs`` rejects)."""
     pdf = pd.concat(frames, ignore_index=True) if len(frames) > 1 else frames[0]
     seg = f"{segment_prefix}{pid:05d}-{seq:03d}"
     n_docs = len(pdf)
@@ -222,11 +228,7 @@ def _flush_segment(
         "dl_eff": pa.array(dl_eff, pa.float64()),
     }
     for c in (*cfg.key_cols, *cfg.stored_cols):
-        arr = pa.Array.from_pandas(pdf[c])
-        if pa.types.is_timestamp(arr.type) and arr.type.unit == "ns":
-            # Spark cannot read TIMESTAMP(NANOS) parquet
-            arr = arr.cast(pa.timestamp("us", tz=arr.type.tz))
-        doc_cols[c] = arr
+        doc_cols[c] = pa.Array.from_pandas(pdf[c], type=col_types[c])
     _write_deterministic(pa.table(doc_cols), seg_dir("docs"))
 
     # norms: packed true doc lengths (uint32), one row per segment — the
@@ -267,7 +269,7 @@ def _flush_segment(
 
 
 def _make_build_fn(cfg: IndexConfig, index_dir: str, max_docs_per_segment: int,
-                   segment_prefix: str = ""):
+                   col_types: dict[str, pa.DataType], segment_prefix: str = ""):
     def build_fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         rows: list[dict] = []
         cur_pid: int | None = None
@@ -279,7 +281,8 @@ def _make_build_fn(cfg: IndexConfig, index_dir: str, max_docs_per_segment: int,
             nonlocal buf, buf_docs, seq
             if buf_docs:
                 rows.append(
-                    _flush_segment(cur_pid, seq, buf, cfg, index_dir, segment_prefix)
+                    _flush_segment(cur_pid, seq, buf, cfg, index_dir, col_types,
+                                   segment_prefix)
                 )
                 seq += 1
             buf, buf_docs = [], 0
@@ -387,7 +390,18 @@ def build_index(
             cfg.n_partitions, *[F.col(c) for c in cfg.routing_cols()]
         ).sortWithinPartitions(PID_COL, *cfg.key_cols)
     )
-    build_fn = _make_build_fn(cfg, index_dir, max_docs_per_segment, segment_prefix)
+    from pyspark.sql.pandas.types import to_arrow_type
+
+    # timestamp_utc=False: pandas hands the task tz-naive values, written as
+    # naive TIMESTAMP(MICROS) (Spark cannot read TIMESTAMP(NANOS))
+    col_types = {
+        f.name: to_arrow_type(f.dataType, timestamp_utc=False)
+        for f in df.schema.fields
+        if f.name in (*cfg.key_cols, *cfg.stored_cols)
+    }
+    build_fn = _make_build_fn(
+        cfg, index_dir, max_docs_per_segment, col_types, segment_prefix
+    )
     manifest = shaped.mapInPandas(build_fn, schema=MANIFEST_SCHEMA)
     import time as _time
 

@@ -42,10 +42,6 @@ def _ijoin(base: str, *parts: str) -> str:
     return "/".join([base.rstrip("/"), *parts])
 
 
-# fetch-phase routing bounds (see _execute): above either, the distributed
-# broadcast-join fetch replaces the driver-side serial segment reads
-_DRIVER_FETCH_MAX_ROWS = 5000
-_DRIVER_FETCH_MAX_SEGS = 64
 # gather budget: past segments x k candidate rows, cut to the global
 # top-k(+ties) IN Spark before collecting (same hatch as query/msearch.py)
 _GATHER_MAX_ROWS = 200_000
@@ -1204,10 +1200,10 @@ def _execute(
     # gather: ≤ k rows (plus score ties) per segment reach the driver — the
     # TopDocs.merge scatter/gather boundary
     # (search/controller/SearchPhaseController.java:144-234). Prune to the
-    # global top-k tie group, then run the fetch phase driver-side: read the
-    # winning rows straight out of the touched segments' doc tables with
-    # pyarrow predicate pushdown (FetchPhase.java:103-157 — the coordinator
-    # loads k stored documents; a distributed join for k rows is waste).
+    # global top-k tie group, then run the fetch phase (_fetch): on a
+    # driver-readable index one pruned pyarrow read of the winners' segment
+    # doc tables (FetchPhase.java:103-157 — the coordinator loads k stored
+    # documents; a distributed join for k rows is waste).
     #
     # distributed-merge escape hatch: on a pre-merge index with 10^4-10^5
     # segments the per-segment top-k rows alone would swamp the driver —
@@ -1227,27 +1223,9 @@ def _execute(
     rows = cand.collect()
     if not rows:
         return _empty_result(reader, extra_cols)
-    scores = np.array([r["score"] for r in rows])
-    if len(rows) > k:
-        theta = float(np.partition(-scores, k - 1)[k - 1] * -1.0)
-        rows = [r for r in rows if r["score"] >= theta]
-
-    # fetch-phase routing: the driver-side pruned read wins for a handful
-    # of winners/segments; past these bounds (large k·ties, or a pre-merge
-    # index with thousands of segments) the serial per-segment open loop
-    # would dominate — switch to the distributed broadcast-join fetch
-    n_segs = len({r["segment_id"] for r in rows})
-    if len(rows) > _DRIVER_FETCH_MAX_ROWS or n_segs > _DRIVER_FETCH_MAX_SEGS:
-        return _spark_fetch(reader, rows, key_cols, extra_cols, k)
-    fetched = _driver_fetch(reader, rows, key_cols, extra_cols)
-    if fetched is None:  # non-local index store → distributed fetch join
-        return _spark_fetch(reader, rows, key_cols, extra_cols, k)
-    fetched = fetched.sort_values(
-        ["score", *key_cols], ascending=[False] + [True] * len(key_cols),
-        kind="mergesort",
-    ).head(k)
-    out_schema = _result_schema(reader, key_cols, extra_cols)
-    return reader.spark.createDataFrame(fetched, schema=out_schema)
+    win = _cut_to_ties(pd.DataFrame([r.asDict() for r in rows]), k)
+    fetched = _fetch(reader, win, key_cols, extra_cols)
+    return _topk_frame(reader, fetched, extra_cols, k)
 
 
 def _local_search(reader, score_fn, present, key_cols, extra_cols, k,
@@ -1294,7 +1272,7 @@ def _local_search(reader, score_fn, present, key_cols, extra_cols, k,
         ).to_pandas()
         norms["segment_id"] = norms["segment_id"].astype(str)
 
-    rows = []
+    outs = []
     for seg, g in post.groupby("segment_id", sort=False):
         aux = norms[norms["segment_id"] == seg][["n_docs", "doc_len_packed"]]
         if allowed_map is not None:
@@ -1305,23 +1283,36 @@ def _local_search(reader, score_fn, present, key_cols, extra_cols, k,
         if del_map and seg in del_map:
             aux = aux.assign(d_ids=[list(del_map[seg])])
         out = score_fn(g, aux)
-        for ldoc, sc in zip(out["local_doc_id"], out["score"]):
-            rows.append({"segment_id": seg, "local_doc_id": int(ldoc), "score": float(sc)})
-    if not rows:
+        if len(out):
+            outs.append(out.assign(segment_id=seg))
+    if not outs:
         return _empty_result(reader, extra_cols)
-    scores = np.array([r["score"] for r in rows])
-    if len(rows) > k:
-        theta = float(np.partition(-scores, k - 1)[k - 1] * -1.0)
-        rows = [r for r in rows if r["score"] >= theta]
-    fetched = _driver_fetch(reader, rows, key_cols, extra_cols)
-    if fetched is None:
-        return None
+    win = _cut_to_ties(pd.concat(outs, ignore_index=True), k)
+    fetched = _fetch(reader, win, key_cols, extra_cols)
+    return _topk_frame(reader, fetched, extra_cols, k)
+
+
+def _cut_to_ties(win: pd.DataFrame, k: int) -> pd.DataFrame:
+    """Keep the global top-k tie group: every row scoring >= the kth best
+    (the gather's cut; ties are broken on the key columns after the fetch)."""
+    if len(win) <= k:
+        return win
+    theta = np.partition(win["score"].to_numpy(), len(win) - k)[len(win) - k]
+    return win[win["score"] >= theta]
+
+
+def _topk_frame(
+    reader: IndexReader, fetched: pd.DataFrame, extra_cols, k: int
+) -> DataFrame:
+    """Fetched winners → the result DataFrame: (score DESC, keys ASC)[:k]."""
+    key_cols = list(reader.cfg.key_cols)
     fetched = fetched.sort_values(
         ["score", *key_cols], ascending=[False] + [True] * len(key_cols),
         kind="mergesort",
     ).head(k)
     return reader.spark.createDataFrame(
-        fetched, schema=_result_schema(reader, key_cols, extra_cols)
+        fetched[[*key_cols, *extra_cols, "score"]],
+        schema=_result_schema(reader, key_cols, extra_cols),
     )
 
 
@@ -1335,52 +1326,49 @@ def _result_schema(reader: IndexReader, key_cols, extra_cols):
     )
 
 
-def _driver_fetch(reader, rows, key_cols, extra_cols):
-    """Fetch winning docs driver-side from the per-segment parquet files."""
-    import pyarrow.parquet as pq
+def _fetch(
+    reader: IndexReader, win: pd.DataFrame, key_cols, extra_cols
+) -> pd.DataFrame:
+    """Fetch phase (FetchPhase.java:103-157): the stored fields of the winners.
 
-    if not fsio.driver_readable(reader.index_dir):
-        return None
-    fs, root = fsio.resolve(reader.index_dir)
-    by_seg: dict[str, list] = {}
-    for r in rows:
-        by_seg.setdefault(r["segment_id"], []).append(r)
-    parts = []
-    for seg, seg_rows in by_seg.items():
-        path = "/".join([root.rstrip("/"), "docs", f"segment_id={seg}", "data.parquet"])
-        from pyarrow.fs import FileType
+    ``win`` holds (segment_id, local_doc_id, score[, query_id]) rows; returns
+    them joined to ``key_cols`` + ``extra_cols``. A driver-readable index is
+    read with ONE pyarrow scan of the docs dataset — every parquet file a
+    writer left in a segment's directory, the builder's data.parquet and a
+    merge's Spark part files alike — partition-pruned to the winners'
+    segments and row-group pruned on local_doc_id. Other stores take one
+    broadcast join in Spark.
+    """
+    cols = ["segment_id", "local_doc_id", *key_cols, *extra_cols]
+    keys = win[["segment_id", "local_doc_id"]].drop_duplicates()
+    segs = sorted(set(keys["segment_id"]))
+    if fsio.driver_readable(reader.index_dir):
+        import pyarrow.dataset as ds
 
-        if fs.get_file_info(path).type == FileType.NotFound:
-            return None
-        ids = [r["local_doc_id"] for r in seg_rows]
-        tbl = pq.read_table(
-            path,
-            filesystem=fs,
-            columns=["local_doc_id", *key_cols, *extra_cols],
-            filters=[("local_doc_id", "in", ids)],
+        docs_ds = reader.local_dataset("docs")
+        if docs_ds is None:
+            docs_ds = fsio.dataset(
+                _ijoin(reader.index_dir, "docs"), partitioning="hive"
+            )
+        docs = docs_ds.to_table(
+            columns=cols,
+            filter=ds.field("segment_id").isin(segs)
+            & ds.field("local_doc_id").isin(sorted(set(keys["local_doc_id"]))),
         ).to_pandas()
-        score_map = {r["local_doc_id"]: r["score"] for r in seg_rows}
-        tbl["score"] = tbl["local_doc_id"].map(score_map)
-        parts.append(tbl.drop(columns=["local_doc_id"]))
-    return pd.concat(parts, ignore_index=True)
-
-
-def _spark_fetch(reader, rows, key_cols, extra_cols, k):
-    seg_ids = sorted({r["segment_id"] for r in rows})
-    cand_df = reader.spark.createDataFrame(
-        [(r["segment_id"], r["local_doc_id"], r["score"]) for r in rows],
-        "segment_id string, local_doc_id int, score double",
-    )
-    fetch_cols = ["segment_id", "local_doc_id", *key_cols, *extra_cols]
-    return (
-        reader.docs()
-        .where(F.col("segment_id").isin(seg_ids))  # partition-pruned fetch
-        .select(*fetch_cols)
-        .join(F.broadcast(cand_df), ["segment_id", "local_doc_id"])
-        .select(*key_cols, *extra_cols, "score")
-        .orderBy(F.col("score").desc(), *[F.col(c).asc() for c in key_cols])
-        .limit(k)
-    )
+        docs["segment_id"] = docs["segment_id"].astype(str)
+    else:
+        docs = (
+            reader.docs()
+            .where(F.col("segment_id").isin(segs))  # partition-pruned
+            .select(*cols)
+            .join(
+                F.broadcast(reader.spark.createDataFrame(
+                    keys, "segment_id string, local_doc_id int")),
+                ["segment_id", "local_doc_id"],
+            )
+            .toPandas()
+        )
+    return win.merge(docs, on=["segment_id", "local_doc_id"], how="inner")
 
 
 def _empty_result(reader: IndexReader, extra_cols: Iterable[str]) -> DataFrame:

@@ -16,7 +16,8 @@ Spark shape — this is where batching pays structurally, not just in RPC:
   one `_filter_sets` pass, tagged with a filter_id and unioned into the
   aux side of the cogroup; queries reference filters by id.
 - one gather: <= k(+score ties) rows per (segment, query) reach the
-  driver, per-query TopDocs.merge, one batched fetch phase.
+  driver, per-query TopDocs.merge, one batched fetch phase (the same
+  ``_fetch`` the single-query executor uses).
 
 At cluster scale this turns "54 queries x (scheduler constant + scan)"
 into "1 x scheduler constant + 1 scan", which is also why the query
@@ -32,14 +33,19 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegerType, StructField, StructType
 
 from elasticsearch_spark.analysis.analyzers import tokenize_text
 from elasticsearch_spark.index.reader import IndexReader
 from elasticsearch_spark.query.executor import (
     _MATCH_COLUMNS,
+    _cut_to_ties,
     _decode_term,
     _empty_result,
+    _fetch,
     _filter_sets,
+    _n_segments,
+    _result_schema,
     lucene_idf,
 )
 from elasticsearch_spark.functions.smallfloat import effective_doc_length
@@ -47,7 +53,7 @@ from elasticsearch_spark.functions.smallfloat import effective_doc_length
 
 # driver-gather bound: the kernel emits <= k(+ties) rows per (segment,
 # query), so a big index times a big batch can overwhelm one collect()
-# (the msearch analog of _DRIVER_FETCH_MAX_ROWS in query/executor.py).
+# (the msearch analog of _GATHER_MAX_ROWS in query/executor.py).
 # Past this estimate the per-query top-k cut runs in Spark first.
 _GATHER_MAX_ROWS = 200_000
 
@@ -75,11 +81,14 @@ def msearch_topk(
     key_cols = list(reader.cfg.key_cols)
     extra_cols = list(extra_cols)
     cand, kernel_plans = _msearch_candidates(reader, queries, k)
+
+    def empty() -> DataFrame:
+        return _empty_result(reader, extra_cols).select(
+            F.lit(0).alias("query_id"), *key_cols, *extra_cols, "score"
+        )
+
     if cand is None:
-        empty = _empty_result(reader, extra_cols)
-        return empty.withColumn("query_id", F.lit(0)).select(
-            "query_id", *key_cols, *extra_cols, "score"
-        ).where(F.lit(False))
+        return empty()
 
     # -- gather + per-query merge + ONE batched fetch ----------------------
     # distributed-merge escape hatch: when segments x Σk_q (the gather's
@@ -87,8 +96,8 @@ def msearch_topk(
     # its global top-k(+ties) IN SPARK — rank() over (query_id, score DESC)
     # keeps exactly the tie group the driver-side theta cut would keep, so
     # results are identical; only <= Σk_q(+ties) rows ever reach collect()
-    if gather_max_rows is not None and _est_gather_rows(
-        reader, kernel_plans
+    if gather_max_rows is not None and _n_segments(reader) * sum(
+        k_q for _, _, _, k_q, _ in kernel_plans
     ) > gather_max_rows:
         kdf = reader.spark.createDataFrame(
             [(qi, k_q) for qi, _, _, k_q, _ in kernel_plans],
@@ -103,50 +112,26 @@ def msearch_topk(
         )
     rows = cand.collect()
     if not rows:
-        return _empty_result(reader, extra_cols).withColumn(
-            "query_id", F.lit(0)
-        ).select("query_id", *key_cols, *extra_cols, "score").where(F.lit(False))
+        return empty()
     k_of = {qi: k_q for qi, _, _, k_q, _ in kernel_plans}
-    by_q: dict[int, list] = {}
-    for r in rows:
-        by_q.setdefault(r["query_id"], []).append(r)
-    winners = []
-    for qi, qrows in by_q.items():
-        k_q = k_of[qi]
-        if len(qrows) > k_q:
-            sc = np.array([r["score"] for r in qrows])
-            theta = float(np.partition(-sc, k_q - 1)[k_q - 1] * -1.0)
-            qrows = [r for r in qrows if r["score"] >= theta]
-        winners.extend(qrows)
-
-    fetched = _fetch_batch(reader, winners, key_cols, extra_cols)
-    per_q = []
-    for qi, g in fetched.groupby("query_id", sort=True):
-        g = g.sort_values(
-            ["score", *key_cols],
-            ascending=[False] + [True] * len(key_cols),
-            kind="mergesort",
-        ).head(k_of[int(qi)])
-        per_q.append(g)
-    out = pd.concat(per_q, ignore_index=True)
-    base = _result_schema_fields(reader, key_cols, extra_cols)
-    schema = "query_id int, " + base
+    cand_pdf = pd.DataFrame([r.asDict() for r in rows])
+    win = pd.concat(
+        [_cut_to_ties(g, k_of[qi]) for qi, g in cand_pdf.groupby("query_id")],
+        ignore_index=True,
+    )
+    out = _fetch(reader, win, key_cols, extra_cols).sort_values(
+        ["query_id", "score", *key_cols],
+        ascending=[True, False] + [True] * len(key_cols),
+        kind="mergesort",
+    )
+    out = out[out.groupby("query_id").cumcount() < out["query_id"].map(k_of)]
+    schema = StructType(
+        [StructField("query_id", IntegerType()),
+         *_result_schema(reader, key_cols, extra_cols).fields]
+    )
     return reader.spark.createDataFrame(
         out[["query_id", *key_cols, *extra_cols, "score"]], schema=schema
     )
-
-
-def _est_gather_rows(reader, kernel_plans) -> int:
-    """segments x Σk_q — the gather's upper bound (ties aside). Segment
-    count comes from the cached local norms when available; the fallback
-    count() job runs only when the bound is actually being enforced."""
-    norms = reader.local_norms()
-    n_segs = (
-        len(norms)
-        if norms is not None
-        else reader.norms().select("segment_id").count()
-    )
-    return n_segs * sum(k_q for _, _, _, k_q, _ in kernel_plans)
 
 
 def _msearch_candidates(reader, queries, k):
@@ -345,64 +330,3 @@ def _msearch_candidates(reader, queries, k):
         )
     )
     return cand, kernel_plans
-
-
-def _fetch_batch(reader, winners, key_cols, extra_cols) -> pd.DataFrame:
-    """Batched fetch phase: every touched segment is read once (pyarrow
-    predicate-pruned when driver-readable, one broadcast join otherwise),
-    then the (segment, local id)->stored-fields map is merged back onto
-    the per-query winner rows."""
-    from elasticsearch_spark.index import fsio
-
-    win = pd.DataFrame(
-        [
-            (r["query_id"], r["segment_id"], r["local_doc_id"], r["score"])
-            for r in winners
-        ],
-        columns=["query_id", "segment_id", "local_doc_id", "score"],
-    )
-    need_cols = ["segment_id", "local_doc_id", *key_cols, *extra_cols]
-    if fsio.driver_readable(reader.index_dir):
-        import pyarrow.parquet as pq
-        from pyarrow.fs import FileType
-
-        fs, root = fsio.resolve(reader.index_dir)
-        parts = []
-        ok = True
-        for seg, g in win.groupby("segment_id"):
-            path = "/".join(
-                [root.rstrip("/"), "docs", f"segment_id={seg}", "data.parquet"]
-            )
-            if fs.get_file_info(path).type == FileType.NotFound:
-                ok = False
-                break
-            tbl = pq.read_table(
-                path,
-                filesystem=fs,
-                columns=["local_doc_id", *key_cols, *extra_cols],
-                filters=[("local_doc_id", "in", sorted(set(g["local_doc_id"])))],
-            ).to_pandas()
-            tbl["segment_id"] = seg
-            parts.append(tbl)
-        if ok:
-            docs = pd.concat(parts, ignore_index=True)
-            return win.merge(docs, on=["segment_id", "local_doc_id"], how="inner")
-    seg_ids = sorted(set(win["segment_id"]))
-    cand_df = reader.spark.createDataFrame(
-        win, "query_id int, segment_id string, local_doc_id int, score double"
-    )
-    fetched = (
-        reader.docs()
-        .where(F.col("segment_id").isin(seg_ids))
-        .select(*need_cols)
-        .join(F.broadcast(cand_df), ["segment_id", "local_doc_id"])
-        .toPandas()
-    )
-    return fetched
-
-
-def _result_schema_fields(reader, key_cols, extra_cols) -> str:
-    from elasticsearch_spark.query.executor import _result_schema
-
-    schema = _result_schema(reader, key_cols, extra_cols)
-    return ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in schema.fields)

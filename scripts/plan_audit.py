@@ -7,6 +7,7 @@ Checks, via .explain output (no job execution):
   - small-dim joins: BroadcastHashJoin, not SortMergeJoin
   - hot paths sit inside WholeStageCodegen spans
   - online BM25: one shuffle per aggregation level, no cartesian products
+  - a merged index keeps auto searches on the driver-local route
 Run: python scripts/plan_audit.py [sf_dir]  → prints PASS/FAIL lines.
 """
 
@@ -336,6 +337,58 @@ def main() -> None:
     if hatched != base:
         FAILS.append(("search_bounded_gather", "hatched results differ from base"))
         print("FAIL  search_bounded_gather (hatched results differ)")
+
+    # 16. merged segments stay on the driver-local route: a merge writes its
+    #     docs as Spark part files, and an auto search_topk on the merged
+    #     index must still score and fetch on the driver — no collect of the
+    #     distributed scorer (FlatMapCoGroupsInPandas) and no Spark fetch
+    #     join (BroadcastHashJoin against docs). The filtered query's one
+    #     filter-set collect is expected.
+    import shutil
+
+    from elasticsearch_spark.config import IndexConfig
+    from elasticsearch_spark.fixtures import generate_transcripts
+    from elasticsearch_spark.index import build_index
+    from elasticsearch_spark.index.merge import tiered_merge
+
+    m_dir = "/tmp/es_spark_plan_audit_merged"
+    shutil.rmtree(m_dir, ignore_errors=True)
+    build_index(
+        spark,
+        spark.createDataFrame(generate_transcripts(n_convs=40, seed=5)),
+        m_dir,
+        IndexConfig(
+            key_cols=("conv_id", "turn_idx"), stored_cols=("role", "tool"),
+            n_partitions=4, dedup_latest_by="ts",
+        ),
+    )
+    tiered_merge(spark, m_dir, repack=False)
+    m_reader = IndexReader(spark, m_dir)
+    _orig_to_pandas = _DF.toPandas
+
+    def _spy_to_pandas(self):
+        captured.append(plan_of(self))
+        return _orig_to_pandas(self)
+
+    captured.clear()
+    n_hits = []
+    _DF.collect, _DF.toPandas = _spy_collect, _spy_to_pandas
+    try:
+        for fc in (None, F.col("role") == "assistant"):
+            n_hits.append(len(_exec.search_topk(
+                m_reader, "error timeout", k=10, filter_cond=fc,
+                extra_cols=("role", "tool"),
+            ).collect()))
+    finally:
+        _DF.collect, _DF.toPandas = _orig_collect, _orig_to_pandas
+    check(
+        "merged_index_local_route",
+        "\n".join(captured),
+        must_not=["FlatMapCoGroupsInPandas", "BroadcastHashJoin"],
+    )
+    if not all(n_hits):
+        FAILS.append(("merged_index_local_route", f"empty results {n_hits}"))
+        print("FAIL  merged_index_local_route (empty results)")
 
     print()
     if FAILS:

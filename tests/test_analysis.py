@@ -259,11 +259,18 @@ def test_path_hierarchy_and_filters_sql_python_parity(spark):
         tokenize_text,
     )
 
-    texts = ["/a/b/c", "x/y", "", "no-delims", "dot.sep/mix"]
+    texts = [
+        "/a/b/c", "x/y", "", "no-delims", "dot.sep/mix",
+        # whitespace other than 0x20 around a keyword token: trim must strip
+        # it like str.strip does
+        "\tTabbed\t", "\n newline \r\n", " \x0b\x0cmixed  ",
+        "it's/o'neil's/x",
+    ]
     df = spark.createDataFrame([(t,) for t in texts], "text string")
     cfgs = [
         AnalyzerConfig(kind="path_hierarchy"),
         AnalyzerConfig(kind="path_hierarchy", path_delimiter="."),
+        AnalyzerConfig(kind="path_hierarchy", path_delimiter="'"),
         AnalyzerConfig(kind="simple", token_filters=("reverse",)),
         AnalyzerConfig(kind="keyword", token_filters=("trim",)),
         AnalyzerConfig(kind="simple", token_filters=("trim", "reverse")),

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from elasticsearch_spark.config import IndexConfig
 from elasticsearch_spark.fixtures import generate_transcripts
-from elasticsearch_spark.index import IndexReader, build_index
+from elasticsearch_spark.index import IndexReader, build_index, fsio
 from elasticsearch_spark.index.merge import tiered_merge
 from elasticsearch_spark.query import search_topk
 
@@ -108,3 +108,125 @@ def test_manifest_lineage_metrics(spark, corpus_df, tmp_root):
     assert man["docs_indexed"].sum() == res.n_docs
     assert (man["postings_bytes"] > 0).all()
     assert man["checksum"].str.len().eq(64).all()
+
+
+# --- merged segments stay on the driver-local query route ------------------
+
+ROUTE_CFG = dict(CFG, stored_cols=("role", "tool", "ts"))
+EXTRA = ("role", "tool", "ts")
+
+
+def _hits(df):
+    return [
+        (r["conv_id"], r["turn_idx"], r["role"], r["tool"], r["ts"], r["score"])
+        for r in df.collect()
+    ]
+
+
+def _jobs_of(spark, fn):
+    """Spark jobs launched by ``fn()``, counted through a job group."""
+    sc = spark.sparkContext
+    sc.setJobGroup("route-check", "jobs of one call")
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup("route-check"))
+
+
+@pytest.mark.parametrize("repack", [False, True])
+def test_merged_segments_stay_on_local_route(spark, corpus_df, tmp_root, repack):
+    """After tiered_merge (merged docs are Spark part files, next to builder
+    data.parquet files of unmerged segments), every route returns the same
+    keys, stored fields and scores, msearch agrees, and an unfiltered auto
+    search runs no Spark job at all: it never falls back to the scorer."""
+    from elasticsearch_spark.query.msearch import msearch_topk
+
+    idx = f"{tmp_root}/idx_route_{int(repack)}"
+    build_index(spark, corpus_df, idx, IndexConfig(n_partitions=7, **ROUTE_CFG))
+    rows = tiered_merge(spark, idx, fan_in=3, repack=repack)
+    assert len(rows) == 2  # 7 segments → two merged, one left as built
+    reader = IndexReader(spark, idx)
+    stored = {
+        (r["conv_id"], r["turn_idx"]): (r["role"], r["tool"], r["ts"])
+        for r in reader.docs().select(*CFG["key_cols"], *EXTRA).collect()
+    }
+    assistant = F.col("role") == "assistant"
+    cases = [(q, None) for q in QUERIES] + [("error timeout", assistant)]
+    batch = msearch_topk(
+        reader,
+        [{"query_text": q, "filter_cond": f} for q, f in cases],
+        k=10,
+        extra_cols=EXTRA,
+    ).collect()
+    for qi, (q, f) in enumerate(cases):
+        by_mode = {
+            mode: _hits(search_topk(
+                reader, q, k=10, filter_cond=f, extra_cols=EXTRA, mode=mode))
+            for mode in ("auto", "local", "spark")
+        }
+        assert by_mode["auto"], q
+        assert by_mode["auto"] == by_mode["local"] == by_mode["spark"], q
+        ms = [
+            (r["conv_id"], r["turn_idx"], r["role"], r["tool"], r["ts"], r["score"])
+            for r in batch if r["query_id"] == qi
+        ]
+        assert ms == by_mode["auto"], q
+        for c, t, role, tool, ts, _ in by_mode["auto"]:
+            assert stored[(c, t)] == (role, tool, ts)
+
+    assert _jobs_of(
+        spark, lambda: search_topk(reader, "error timeout", k=10).collect()
+    ) == 0
+
+    # a store the driver cannot read: scoring and fetch both run in Spark
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(fsio, "driver_readable", lambda path: False)
+        remote = msearch_topk(
+            reader,
+            [{"query_text": q, "filter_cond": f} for q, f in cases],
+            k=10,
+            extra_cols=EXTRA,
+        ).collect()
+        q, f = cases[-1]
+        assert _hits(search_topk(
+            reader, q, k=10, filter_cond=f, extra_cols=EXTRA)) == ms
+    assert [tuple(r) for r in remote] == [tuple(r) for r in batch]
+
+
+def test_all_null_stored_column_segment(spark, tmp_root):
+    """A segment whose stored ``tool`` is all null must still write the
+    column's string type: Spark reads of docs, filtered search and merge
+    all read every segment's doc table."""
+    import pandas as pd
+
+    schema = (
+        "conv_id string, turn_idx int, role string, text string,"
+        " tool string, ts timestamp"
+    )
+    base = generate_transcripts(n_convs=20, seed=11)
+    tail = base.drop_duplicates(["conv_id", "turn_idx"]).head(12).assign(
+        conv_id=lambda d: "tail-" + d["conv_id"], tool=None
+    )
+    assert tail["tool"].isna().all()
+    idx = f"{tmp_root}/idx_null_tool"
+    cfg = IndexConfig(n_partitions=2, **ROUTE_CFG)
+    build_index(spark, spark.createDataFrame(base, schema), idx, cfg)
+    build_index(
+        spark, spark.createDataFrame(tail, schema), idx, cfg, segment_prefix="b1-"
+    )
+    reader = IndexReader(spark, idx)
+    n = len(base.drop_duplicates(["conv_id", "turn_idx"])) + len(tail)
+    assert reader.docs().count() == n
+    assert reader.docs().where(F.col("tool").isNull()).count() >= len(tail)
+    hits = search_topk(
+        reader, "error timeout", k=10, filter_cond=F.col("tool").isNull(),
+        extra_cols=("tool",), mode="spark",
+    ).collect()
+    assert hits and all(r["tool"] is None for r in hits)
+    tiered_merge(spark, idx, repack=False)
+    merged = IndexReader(spark, idx)
+    assert merged.docs().count() == n
+    assert pd.isna(merged.docs().where(
+        F.col("conv_id").startswith("tail-")).toPandas()["tool"]).all()
